@@ -946,7 +946,7 @@ def dedup_containment(spark, sf):
 def sim_cosine_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return cosine_topk(emb, queries, k=5, dim=64)
+    return cosine_topk(emb, queries, k=5)
 
 
 def sim_range_search(spark, sf):
@@ -959,7 +959,7 @@ def sim_range_search(spark, sf):
     from .similarity import cosine_range
 
     emb = _t(spark, sf, "embeddings")
-    return cosine_range(emb, _planted_ann_queries(emb), threshold=0.9, dim=64)
+    return cosine_range(emb, _planted_ann_queries(emb), threshold=0.9)
 
 
 def sim_lsh_topk(spark, sf):
@@ -4294,7 +4294,7 @@ def sim_knn_components(spark, sf):
     from .similarity import cosine_topk
 
     emb = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
-    nn = cosine_topk(emb, emb, k=3, dim=64)
+    nn = cosine_topk(emb, emb, k=3)
     a, b = nn.alias("a"), nn.alias("b")
     mutual = (a.join(b, (F.col("a.query_id") == F.col("b.item_id"))
                      & (F.col("a.item_id") == F.col("b.query_id")))

@@ -388,7 +388,7 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
       node births/deaths are checked only at delta endpoints, and the
       final result is the cached history's last iteration overlaid
       with the recomputed rows. This is the 100x-scale path; the
-      2M-node probe (tools/probe_round5.py) pins it beating cold
+      2M-node probe (ROUND5.md) measured it beating cold
       recompute.
     - **diff path** (no changelog): the delta is derived by two
       exceptAll multiset comparisons and the node universe is rebuilt

@@ -1,17 +1,26 @@
 """The KG-construction batch pipeline (north star, SURVEY.md §3.1).
 
-    pages ──repartition(xxhash64(url))──▶ extract (mapInPandas, Arrow)
-          ──▶ docs ──▶ triples (mapInPandas, kernel/pipeline.py)
-          ──▶ [triples table | lineage table]   (+ engine dimension union)
+    pages ──[repartition(xxhash64(url)) when under-parallel]──▶
+          extract + kernel (ONE mapInPandas stage, Arrow; kernel/pipeline.py)
+          ──▶ raw triple rows ──▶ [triples table | errors | lineage table]
+                                  (+ engine dimension union)
+
+The docs table (``extract_docs``) is a separate, lazy extract stage read
+by serving, semver resolution and the text invariant; it is never the
+kernel's input — every pages -> triples path (``run_pipeline``,
+``plans/resume.py``, ``streaming/incremental.py``) goes through
+``pages_to_triples``.
 
 Scale notes (the 100 TB design):
-- one explicit shuffle (the url-hash repartition); extract and triple
-  stages are narrow — a doc is self-contained, so doc->triples never
+- at most one explicit shuffle (the url-hash repartition); the python
+  stage is narrow — a page is self-contained, so pages->triples never
   shuffles.
 - all Python work is Arrow-batched ``mapInPandas`` (no per-row UDFs);
   everything after the triple stage is built-in column ops.
-- per-partition lineage rows (A6/SN2) are derived from the same rows
-  that form the triples table — one pass, no second job.
+- per-partition lineage rows (A6/SN2) aggregate the same raw rows that
+  form the triples table, but the raw frame is not cached, so a lineage
+  write re-runs the Python stage (perfbench reports it as
+  ``kg.lineage_s``).
 - failed bundles emit an error row instead of triples (T2 per-bundle
   atomicity; mirrors the -e/-E sidecar files,
   /root/reference/bin/exportTriples.js:168-180).
@@ -19,12 +28,6 @@ Scale notes (the 100 TB design):
 
 from __future__ import annotations
 
-import json as jsonlib
-
-try:  # orjson: 3-6x faster loads on the manifest hot path; optional
-    import orjson as _fastjson
-except ImportError:  # pragma: no cover - depends on image contents
-    _fastjson = jsonlib
 from typing import Iterator
 
 import pandas as pd
@@ -57,15 +60,14 @@ TRIPLES_SCHEMA = T.StructType([
 ])
 
 
-def repartition_pages(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def repartition_pages(pages: DataFrame) -> DataFrame:
     """Explicit url-hash repartition (north_rule): spreads crawl-order
     locality so no executor sees a hot host's pages clustered."""
-    n = num_partitions or pages.sparkSession.sparkContext.defaultParallelism
+    n = pages.sparkSession.sparkContext.defaultParallelism
     return pages.repartition(n, F.xxhash64("url"))
 
 
-def maybe_repartition_pages(pages: DataFrame,
-                            num_partitions: int | None = None) -> DataFrame:
+def maybe_repartition_pages(pages: DataFrame) -> DataFrame:
     """Shuffle only when the scan is under-parallel. A shuffle feeding a
     python stage forces row-wise shuffle-read -> Arrow conversion, which
     measured ~2x slower than the columnar parquet->Arrow path — so when
@@ -74,7 +76,7 @@ def maybe_repartition_pages(pages: DataFrame,
     layouts (hot hosts clustered into few files) and for the bucketed
     writers."""
     spark = pages.sparkSession
-    target = num_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     current = pages.rdd.getNumPartitions()
     if current >= target:
         return pages
@@ -98,53 +100,6 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
 
 def extract_docs(pages: DataFrame) -> DataFrame:
     return pages.mapInPandas(_extract_partition, schema=DOCS_SCHEMA)
-
-
-def _triples_partition(root: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from ..kernel.jsonld_rdf import to_triples
-        from ..kernel.pipeline import export_bundle
-
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else -1
-        cols = [f.name for f in TRIPLES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, kind, doc_json in zip(pdf["url"], pdf["doc_kind"], pdf["doc_json"]):
-                try:
-                    doc = _fastjson.loads(doc_json)
-                except Exception as e:
-                    rows.append((url, None, None, None, None, None, None, part_id, str(e)))
-                    continue
-                if kind == "npm_manifest":
-                    result = export_bundle(doc, root)
-                    if result.error is not None:
-                        rows.append((url, result.bundle, None, None, None, None,
-                                     None, part_id, result.error))
-                        continue
-                    for t in result.triples:
-                        rows.append((url, result.bundle, t.subj, t.pred, t.obj,
-                                     t.obj_is_literal, t.graph, part_id, None))
-                else:  # jsonld / microdata: generic JSON-LD over the page IRI
-                    try:
-                        for t in to_triples(doc, root=url):
-                            rows.append((url, None, t.subj, t.pred, t.obj,
-                                         t.obj_is_literal, t.graph, part_id, None))
-                    except Exception as e:
-                        rows.append((url, None, None, None, None, None, None,
-                                     part_id, f"{type(e).__name__}: {e}"))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return fn
-
-
-def docs_to_triples(docs: DataFrame, root: str = DEFAULT_ROOT) -> DataFrame:
-    """Docs -> raw triple rows (error rows included; narrow, no shuffle)."""
-    return docs.select("url", "doc_kind", "doc_json").mapInPandas(
-        _triples_partition(root), schema=TRIPLES_SCHEMA
-    )
 
 
 def _fused_partition(root: str):
@@ -286,28 +241,22 @@ def write_triples(triples: DataFrame, path: str, n_buckets: int = 64,
 
 
 def run_pipeline(pages: DataFrame, root: str = DEFAULT_ROOT,
-                 num_partitions: int | None = None,
-                 include_engines: bool = True,
-                 fused: bool = True) -> dict:
-    """Full extract->triples pass; returns the interesting DataFrames.
+                 include_engines: bool = True) -> dict:
+    """Full pages->triples pass; returns the interesting DataFrames.
 
-    ``fused=True`` (default) runs extract+kernel in one python stage —
-    the throughput path. The returned ``docs`` DataFrame is the
-    separate extract stage either way (lazy; only computed if the
-    caller uses it, e.g. for the text-pass-through check)."""
+    Extract and kernel run in one python stage (``pages_to_triples``).
+    The returned ``docs`` DataFrame is the separate extract stage
+    (lazy; only computed if the caller uses it, e.g. for the
+    text-pass-through check)."""
     spark = pages.sparkSession
-    pages_p = maybe_repartition_pages(pages, num_partitions)
-    docs = extract_docs(pages_p)
-    if fused:
-        raw = pages_to_triples(pages_p, root)
-    else:
-        raw = docs_to_triples(docs, root)
+    pages_p = maybe_repartition_pages(pages)
+    raw = pages_to_triples(pages_p, root)
     triples, errors = split_errors(raw)
     if include_engines:
         triples = triples.unionByName(engine_triples(spark, root).drop("error"))
     return {
         "pages": pages_p,
-        "docs": docs,
+        "docs": extract_docs(pages_p),
         "raw": raw,
         "triples": triples,
         "errors": errors,
@@ -315,20 +264,17 @@ def run_pipeline(pages: DataFrame, root: str = DEFAULT_ROOT,
     }
 
 
-def select_bundle_docs(docs: DataFrame, names: list[str]) -> DataFrame:
-    """SC6: the ``-i`` stdin name-list mode
-    (/root/reference/bin/exportTriples.js:73-85) — restrict processing
-    to the given bundle names via a broadcast semi-join on the
-    manifest's name (strictly better than the reference's sequential
-    list: distributed, order-free)."""
-    spark = docs.sparkSession
-    wanted = spark.createDataFrame([(n,) for n in names], "name string")
-    named = docs.withColumn(
-        "name", F.get_json_object("doc_json", "$.name"))
-    return (
-        named.join(F.broadcast(wanted), "name", "left_semi")
-        .drop("name")
-    )
+def select_bundles(triples: DataFrame, names: list[str]) -> DataFrame:
+    """SC6: the ``-i`` stdin name-list mode (the reference's
+    bin/exportTriples.js:73-85) — keep only the rows of the given bundle
+    names via a broadcast left-semi join on ``bundle`` (strictly better
+    than the reference's sequential list: distributed, order-free).
+    Works on raw rows too, so a named bundle that failed keeps its error
+    row."""
+    wanted = triples.sparkSession.createDataFrame(
+        [(n,) for n in names], "name string")
+    return triples.join(F.broadcast(wanted),
+                        triples["bundle"] == wanted["name"], "left_semi")
 
 
 PROV = "http://www.w3.org/ns/prov#"

@@ -22,9 +22,13 @@ def get_spark(app: str = "npm_extraction_server_spark",
     """``java_opts``: extra -XX flags appended after the ParallelGC
     default (the simulated-executor benchmark right-sizes GC/JIT thread
     counts to its CPU pin). ``driver_mem``: override the default heap —
-    a 2-core pinned simulated executor should not claim 48g."""
+    a 2-core pinned simulated executor should not claim 48g.
+
+    Host-fit defaults: ``local[N]`` over the cores this process may run
+    on (``SPARK_GRAFT_CPUS`` overrides) and a driver heap of
+    ``_default_heap()`` (``SPARK_GRAFT_DRIVER_MEM`` overrides)."""
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1: master.find("]")]
@@ -33,7 +37,7 @@ def get_spark(app: str = "npm_extraction_server_spark",
     # G1 collapsed at 32 concurrent tasks (measured 2.8x slower than
     # ParallelGC on the fused pipeline)
     jopts = ("-XX:+UseParallelGC " + java_opts).strip()
-    mem = driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    mem = driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap()
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -85,6 +89,14 @@ def get_spark(app: str = "npm_extraction_server_spark",
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+def _default_heap() -> str:
+    """``min(48g, 40% of MemTotal)``: the JVM's resident size runs well
+    past its heap (off-heap Arrow buffers, metaspace, code cache), so a
+    heap near MemTotal gets the driver OOM-killed on a small host."""
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(48 * 1024, total_mb * 2 // 5)}m"
 
 
 def build_package_zip() -> str:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kg import extract_docs, lineage, run_pipeline, split_errors, write_triples
+from .kg import run_pipeline, write_triples
 from .linking import canonicalize_triples, link_entities
 
 
@@ -98,10 +98,7 @@ def materialize_graph(pages: DataFrame, out_dir: str,
     """pages -> {triples, entities, lineage, errors} tables on disk."""
     spark = pages.sparkSession
     result = run_pipeline(pages, root=root)
-    raw = result["raw"]
-    triples, errors = split_errors(raw)
-    triples = triples.unionByName(
-        result["triples"].filter(F.col("bundle") == "engines"))
+    triples = result["triples"]
     if resolve_ranges:
         triples = triples.unionByName(
             max_satisfying_edges(result["docs"], root).withColumn(
@@ -119,8 +116,8 @@ def materialize_graph(pages: DataFrame, out_dir: str,
     write_triples(canonical, f"{out_dir}/triples", n_buckets=n_buckets)
     if entities is not None:
         entities.write.mode("overwrite").parquet(f"{out_dir}/entities")
-    lineage(raw).write.mode("overwrite").parquet(f"{out_dir}/lineage")
-    errors.write.mode("overwrite").parquet(f"{out_dir}/errors")
+    result["lineage"].write.mode("overwrite").parquet(f"{out_dir}/lineage")
+    result["errors"].write.mode("overwrite").parquet(f"{out_dir}/errors")
 
     back = spark.read.parquet(f"{out_dir}/triples")
     return {

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.kg import docs_to_triples, extract_docs, split_errors
+from ..plans.kg import pages_to_triples, split_errors
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -38,7 +38,7 @@ def changed_since(pages: DataFrame, start: str, end: str | None = None) -> DataF
 def incremental_triples(pages: DataFrame, start: str, end: str | None = None,
                         root: str = "http://example.org/") -> DataFrame:
     window = changed_since(pages, start, end)
-    triples, _ = split_errors(docs_to_triples(extract_docs(window), root))
+    triples, _ = split_errors(pages_to_triples(window, root))
     return triples
 
 
@@ -54,7 +54,7 @@ def snapshot_incremental_triples(spark: SparkSession, table: str,
     from ..sources.snapshots import read_incremental
 
     pages = read_incremental(spark, table, from_snapshot, to_snapshot)
-    triples, _ = split_errors(docs_to_triples(extract_docs(pages), root))
+    triples, _ = split_errors(pages_to_triples(pages, root))
     return triples
 
 
@@ -70,7 +70,7 @@ def stream_pipeline(spark: SparkSession, pages_dir: str, out_dir: str,
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        triples, _ = split_errors(docs_to_triples(extract_docs(batch_df), root))
+        triples, _ = split_errors(pages_to_triples(batch_df, root))
         (triples.withColumn("epoch", F.lit(epoch_id))
          .write.mode("append").parquet(f"{out_dir}/triples"))
 
@@ -118,7 +118,7 @@ def stream_triples_to_snapshots(spark: SparkSession, pages_dir: str,
                     for m in snapshot_log(table)}
             if (ckpt_key, epoch_id) in done:
                 return  # replayed epoch of THIS stream: already committed
-        triples, _ = split_errors(docs_to_triples(extract_docs(batch_df), root))
+        triples, _ = split_errors(pages_to_triples(batch_df, root))
         commit(triples, table, props={"epoch": epoch_id, "ckpt": ckpt_key})
 
     return (

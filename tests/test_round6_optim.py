@@ -11,8 +11,6 @@ pre-rewrite semantics:
   produce exactly the candidate-derived pair set the old self-join
   formulation produced (cross-checked here against a brute-force
   reconstruction from the signatures).
-- similarity unrolled dot/norm: the ``dim``-unrolled expression chain
-  must be bit-identical to the higher-order aggregate form.
 - pagerank checkpoint interval: the sink-free lazy-round path must
   equal a per-iteration materialization (oracle-grid values).
 """
@@ -142,25 +140,6 @@ def test_minhash_lsh_pairs_equal_bruteforce_bucket_pairs(spark, docs):
                                       threshold=0.3).collect()}
     assert got == expect
     assert (0, 3) in got  # the exact duplicate pair must be found
-
-
-def test_unrolled_dot_norm_bitwise_equal_hof(spark):
-    from npm_extraction_server_spark.operators.similarity import _dot, _norm
-
-    rows = [(i, [((i * 31 + j * 7) % 97) / 97.0 - 0.5 for j in range(16)])
-            for i in range(50)]
-    df = spark.createDataFrame(rows, ["id", "v"]) \
-        .select("id", F.col("v").cast("array<float>").alias("v"))
-    out = df.select(
-        _dot(F.col("v"), F.col("v")).alias("hof_dot"),
-        _dot(F.col("v"), F.col("v"), dim=16).alias("unr_dot"),
-        _norm(F.col("v")).alias("hof_norm"),
-        _norm(F.col("v"), dim=16).alias("unr_norm"),
-    ).collect()
-    import struct
-    for r in out:
-        assert struct.pack("d", r["hof_dot"]) == struct.pack("d", r["unr_dot"])
-        assert struct.pack("d", r["hof_norm"]) == struct.pack("d", r["unr_norm"])
 
 
 def test_pagerank_interval_checkpoint_equals_history_path(spark):

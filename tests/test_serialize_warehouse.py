@@ -185,6 +185,38 @@ def test_max_satisfying_edges_in_graph(spark, tmp_path):
     assert "/bundles/npm/" in row["subj"] and "/bundles/npm/" in row["obj"]
 
 
+def test_materialize_graph_package_named_engines(spark, tmp_path):
+    """A crawled package named ``engines`` is an ordinary bundle: its
+    triples are written once, next to the engine dimension's."""
+    import json as jsonlib
+
+    from pyspark.sql import functions as F
+
+    from npm_extraction_server_spark.plans.kg import engine_triples
+    from npm_extraction_server_spark.plans.warehouse import materialize_graph
+
+    pkg = pkg_simple()
+    pkg["_id"] = pkg["name"] = "engines"
+    for v in pkg["versions"].values():
+        v["name"] = "engines"
+    expected = export_bundle(pkg, ROOT)
+    assert expected.error is None and expected.bundle == "engines"
+    html = ('<html><body><script type="application/json" '
+            'data-kind="npm-manifest">' + jsonlib.dumps(pkg)
+            + "</script></body></html>").encode()
+    url = "http://x.org/engines"
+    pages = spark.createDataFrame(
+        [(url, None, html, "t", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    out = str(tmp_path / "g3")
+    materialize_graph(pages, out, root=ROOT, do_linking=False,
+                      resolve_ranges=False)
+    back = spark.read.parquet(f"{out}/triples")
+    assert back.filter(F.col("src_url") == url).count() == len(expected.triples)
+    assert back.filter(F.col("src_url") == "engine:").count() == \
+        engine_triples(spark, ROOT).count()
+
+
 def test_parse_roundtrip_every_format():
     """kernel/parse: parse(serialize(x, fmt), fmt) == x as a multiset
     for every serializer, including named graphs (nq/trig), language

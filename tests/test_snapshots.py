@@ -394,11 +394,7 @@ def test_snapshot_incremental_pipeline(spark, tmp_path):
         snapshot_incremental_triples,
     )
 
-    from npm_extraction_server_spark.plans.kg import (
-        docs_to_triples,
-        extract_docs,
-        split_errors,
-    )
+    from npm_extraction_server_spark.plans.kg import pages_to_triples, split_errors
 
     t = str(tmp_path / "pages_tbl")
     pages = pages_df(spark, 20, partitions=2).localCheckpoint(eager=True)
@@ -410,7 +406,7 @@ def test_snapshot_incremental_pipeline(spark, tmp_path):
     cols = ["src_url", "subj", "pred", "obj", "obj_is_literal", "graph"]
     inc = {tuple(r) for r in snapshot_incremental_triples(
         spark, t, from_snapshot=s1).select(cols).collect()}
-    direct, _ = split_errors(docs_to_triples(extract_docs(batch2)))
+    direct, _ = split_errors(pages_to_triples(batch2))
     assert len(inc) > 0
     assert inc == {tuple(r) for r in direct.select(cols).collect()}
 

@@ -148,21 +148,18 @@ def test_write_triples_bucketed(pipeline, tmp_path):
     assert back.select("bucket").distinct().count() > 1
 
 
-def test_select_bundle_docs(pipeline, spark):
-    """SC6 stdin-list mode: only the named bundles are processed."""
-    from npm_extraction_server_spark.plans.kg import (
-        docs_to_triples,
-        select_bundle_docs,
-        split_errors,
-    )
+def test_select_bundles(pipeline):
+    """SC6 stdin-list mode: only the named bundles' rows survive, and
+    every row of a named bundle does (engine and unnamed rows drop)."""
+    from npm_extraction_server_spark.plans.kg import select_bundles
 
-    docs = pipeline["docs"]
+    triples = pipeline["triples"]
     names = ["hotpkg", "pkg-7"]
-    picked = select_bundle_docs(docs.filter(F.col("doc_kind") == "npm_manifest"),
-                                names)
-    triples, _ = split_errors(docs_to_triples(picked))
-    got = {r["bundle"] for r in triples.select("bundle").distinct().collect()}
+    picked = select_bundles(triples, names)
+    assert picked.columns == triples.columns
+    got = {r["bundle"] for r in picked.select("bundle").distinct().collect()}
     assert got <= set(names) and "hotpkg" in got
+    assert picked.count() == triples.filter(F.col("bundle").isin(names)).count()
 
 
 def test_rdfa_lite_extraction():

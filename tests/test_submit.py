@@ -28,3 +28,18 @@ def test_spark_submit_pipeline(tmp_path):
     assert summary["n_triples"] > 0
     # the materialized warehouse exists on disk
     assert (out / "triples").exists() and (out / "lineage").exists()
+
+
+def test_measure_scaling_reports_unfit_host_without_spawning(monkeypatch):
+    """A host too small for the disjoint N / 4N pin layout gets a
+    ``measurable: False`` result instead of pins to missing cores."""
+    from tools import scale_lib
+
+    def no_spawn(*a, **kw):
+        raise AssertionError("no executor may start on an unfit host")
+
+    monkeypatch.setattr(scale_lib, "_spawn", no_spawn)
+    n = len(os.sched_getaffinity(0))
+    out = scale_lib.measure_scaling("unused", exec_cores=1, n_execs=n)
+    assert out["measurable"] is False
+    assert f"{n} available" in out["reason"]

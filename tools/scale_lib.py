@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -58,7 +59,19 @@ def measure_scaling(pages_dir: str, exec_cores: int = 2, n_execs: int = 4,
     (cores 0-1 take timer/IRQ/kworker housekeeping on this host, and a
     2-core executor pinned there showed ±25% pass noise); the N
     executor owns the next exec_cores, the 4N fleet the block after —
-    all disjoint, so an idle fleet cannot slow the measured one."""
+    all disjoint, so an idle fleet cannot slow the measured one.
+
+    Core ids are positions in this process's affinity set, not raw ids.
+    A host with fewer than ``cpu_base + exec_cores * (1 + n_execs)``
+    usable cores cannot hold the disjoint layout, so the result is
+    ``{"measurable": False, "reason": ...}`` and no executor starts."""
+    cores = sorted(os.sched_getaffinity(0))
+    need = cpu_base + exec_cores * (1 + n_execs)
+    if len(cores) < need:
+        return {"measurable": False,
+                "reason": (f"needs {need} cores ({cpu_base} reserved + "
+                           f"{1 + n_execs} executors x {exec_cores}); "
+                           f"{len(cores)} available")}
     all_files = sorted(glob.glob(f"{pages_dir}/part-*.parquet"))
     slices = _slices(pages_dir, n_execs)
     # SPREAD the fleet's pins across the core space instead of packing
@@ -66,22 +79,21 @@ def measure_scaling(pages_dir: str, exec_cores: int = 2, n_execs: int = 4,
     # this host (packed 4x2 fleet measured ~12% slower than spread),
     # and real cluster executors live on separate machines with zero
     # cache sharing — spread placement is the faithful simulation.
-    import os
-    n_cpus = os.cpu_count() or 32
     stride = max(exec_cores,
-                 (n_cpus - cpu_base - exec_cores) // max(n_execs, 1))
+                 (len(cores) - cpu_base - exec_cores) // max(n_execs, 1))
+
+    def cpuset(lo: int) -> str:
+        return ",".join(str(c) for c in cores[lo:lo + exec_cores])
+
     with tempfile.TemporaryDirectory() as td:
         sync = Path(td)
-        lo = cpu_base
         n_passes = n_pairs + 1  # + the discarded burn-in pair
-        procs = [_spawn(sync, "n", 0, exec_cores,
-                        f"{lo}-{lo + exec_cores - 1}", n_passes, warm_sec,
-                        all_files)]
+        procs = [_spawn(sync, "n", 0, exec_cores, cpuset(cpu_base),
+                        n_passes, warm_sec, all_files)]
         for i, sl in enumerate(slices):
             lo = cpu_base + exec_cores + i * stride
-            cpuset = f"{lo}-{lo + exec_cores - 1}"
-            procs.append(_spawn(sync, "x", i, exec_cores, cpuset, n_passes,
-                                warm_sec, sl))
+            procs.append(_spawn(sync, "x", i, exec_cores, cpuset(lo),
+                                n_passes, warm_sec, sl))
 
         def wait(names: list[str]) -> None:
             while not all((sync / nm).exists() for nm in names):
